@@ -6,9 +6,10 @@ Usage: python3 scripts/bench_compare.py <old.json> <new.json> [topN]
 Prints totals (raw + calibration-normalized when both artifacts carry
 calibration samples), query-count deltas, and the topN largest per-query
 movers with ratios. Calibration normalization divides each artifact's
-total by its min(calib_start, calib_end) so cross-run comparisons factor
-out host speed (the ruler is JIT-sensitive across cold sessions — only
-compare full-suite runs, where the end sample is always warmed).
+total by its calib_start, the same divisor graft.Bench uses for its
+calibrated_total, so cross-run comparisons factor out host speed (the
+ruler is JIT-sensitive across cold sessions; calib_end well above
+calib_start flags mid-run contention).
 Dev-tool only (driver-side python env); the shipped library is Scala.
 """
 import json, sys
@@ -17,8 +18,8 @@ def load(p):
     d = json.load(open(p))
     qs = {k: v["sec"] for k, v in d["queries"].items() if v.get("ok", True)}
     calib = None
-    if "calib_start_sec" in d and "calib_end_sec" in d:
-        calib = min(d["calib_start_sec"], d["calib_end_sec"])
+    if "calib_start_sec" in d:
+        calib = d["calib_start_sec"]
     return d, qs, calib
 
 def main():

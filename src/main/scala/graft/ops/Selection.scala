@@ -229,7 +229,7 @@ object Selection {
     * bit-score arithmetic. */
   def distributionDriftSliced(corpus: DataFrame,
                               beforeCond: Column, afterCond: Column,
-                              id: Column, text: Column,
+                              text: Column,
                               buckets: Int = 512,
                               portable: Boolean = false): DataFrame = {
     require(buckets > 0, s"buckets: $buckets")

@@ -34,15 +34,17 @@ object GraftOps {
     val helper = Seq("__nt_part", "__nt_rn", "__nt_cnt", "__nt_off", "__nt_n")
     require(helper.forall(h => !df.columns.contains(h)),
       s"ntileDistributed: input must not carry ${helper.mkString("/")}")
-    // LAZY checkpoint: repartitionByRange's boundary sampling is a
-    // separate pass over the child — un-truncated, a chained call (or
-    // any non-trivial upstream) computes its whole lineage once for
-    // the sample and again for the data (measured: 3 chained quartile
-    // calls re-derived the per-user aggregate 6×). The sampling job
-    // materializes the checkpoint; every later pass reads it.
-    val src = df.localCheckpoint(false)
-    val sorted = src.repartitionByRange(order: _*)
+    // LAZY checkpoint with `__nt_part` stamped in: both consumers (the
+    // counts aggregate and the row_number branch) read this one
+    // materialized state. Were each to plan its own range exchange
+    // (exchange reuse and AQE both off), each would sample its own
+    // boundaries, and a row's partition, hence its offset, would differ
+    // between the two. The checkpoint also truncates the lineage, so a
+    // chained call does not re-derive its whole upstream once per
+    // consumer; the first consumer's job materializes it.
+    val sorted = df.repartitionByRange(order: _*)
       .withColumn("__nt_part", spark_partition_id())
+      .localCheckpoint(false)
     val counts = sorted.groupBy(col("__nt_part"))
       .agg(count(lit(1)).as("__nt_cnt"))
     // tiny frame (one row per shuffle partition): the unpartitioned

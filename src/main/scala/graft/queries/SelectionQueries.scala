@@ -241,7 +241,7 @@ object SelectionQueries extends QueryModule {
     // gram cost, the term that dominates this operator
     Selection.distributionDriftSliced(d,
       col("doc_id") % 3 =!= 0, col("doc_id") % 5 =!= 0,
-      col("doc_id"), col("text"), Buckets, portable = true)
+      col("text"), Buckets, portable = true)
   }
 
   private val corpusDriftSql = {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 import graft.similarity.Similarity
 
@@ -212,91 +212,77 @@ object AnnIndex {
                refreshPolicy: Option[RefreshPolicy] = None)
       : StreamingQuery = {
     val spark = vecs.sparkSession
-    def runPolicy(): Unit = compactWhenBatchesExceed.foreach { threshold =>
-      val ld = listsDir(root, liveVersion(spark, root))
-      val p = new Path(ld)
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        BatchStore.compactIfOver(spark, ld, threshold,
-          dropDeletedOn = Some("cand_id"))
-    }
-    runPolicy()
-    val writer = vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (continuous) runPolicy()
-        val sp = batch.sparkSession
-        val v = liveVersion(sp, root)
-        val (adds, dels, _, nDels) = kindCol match {
-          case Some(kc) => BatchStore.splitMixed(batch, kc)
-          case None => (batch, batch.limit(0), -1L, 0L)
-        }
-        val target = s"${listsDir(root, v)}/${BatchStore.BatchCol}=$batchId"
-        // monitored encode keeps the assignment similarity so the drift
-        // statistic is a by-product of the batch's own encode (one agg
-        // over the persisted batch-sized frame, never a corpus pass);
-        // the unmonitored path is IndexStream's, byte-identical to
-        // before the policy existed
-        val batchRes: Option[Long] = refreshPolicy match {
-          case None =>
-            IndexStream.encodeAgainst(adds, centDir(root, v))
-              .write.mode("overwrite").parquet(target)
-            None
-          case Some(_) =>
-            val centPath = new Path(centDir(root, v))
-            require(centPath
-                .getFileSystem(sp.sparkContext.hadoopConfiguration)
-                .exists(centPath),
-              s"centroid store missing at ${centDir(root, v)} — refusing " +
-                "to encode against an empty quantizer")
-            val assigned = Similarity.ivfAssignSim(
-                BatchStore.spreadBatch(adds)
-                  .select(col("vec_id").as("cand_id"),
-                    col("embedding").as("cv")),
-                sp.read.parquet(centDir(root, v)))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            assigned
-              .withColumn("scale",
-                graft.functions.VectorFns.quantize_scale(col("cv")))
-              .withColumn("code",
-                graft.functions.VectorFns.quantize_i8(col("cv"), col("scale")))
-              .select("cand_id", "cent_id", "code")
-              .write.mode("overwrite").parquet(target)
-            val r = residualFp(assigned)
-            assigned.unpersist()
-            r
-        }
-        // deletes land BEFORE a triggered refresh, so the rebuild
-        // excludes them and carries the tombstone set forward
-        if (kindCol.nonEmpty && nDels > 0)
-          BatchStore.deleteNonEmpty(sp, listsDir(root, v),
-            dels.select("vec_id"))
-        // trigger check at batch END — a between-batches instant: the
-        // next batch resolves the new version, and a crash-replay of
-        // THIS batch is fenced by the rebuild's pinned hwm (its re-write
-        // lands under the pointer filter, dead on arrival); the replayed
-        // batch's recomputed residual compares against the REFRESHED
-        // baseline (trained on the drifted data), so it cannot
-        // double-trigger
-        // the baseline must be STRICTLY positive: a 0 baseline (a corpus
-        // whose vectors sit exactly on its centroids) carries no usable
-        // drift scale — factor × 0 would fire on ANY positive residual,
-        // and the post-refresh baseline could stay 0, so the trigger
-        // would never self-limit; such a degenerate store behaves like
-        // the documented un-stamped case instead (monitor records, never
-        // triggers)
-        for (p <- refreshPolicy; r <- batchRes;
-             base <- versionResidual(sp, root, v)
-             if base > 0L && r > p.residualFactor * base)
-          refresh(sp, root,
-            p.source match {
-              case PinnedCorpus(vecs) => vecs
-              case StoreCorpus(dir) => readStoreCorpus(sp, dir)
-            },
-            p.nlist, p.lloydIters)
-        ()
+    BatchStore.maintain(vecs, checkpointDir, continuous, kindCol,
+        policy = () => compactWhenBatchesExceed.foreach(t =>
+          BatchStore.compactIfOver(spark,
+            listsDir(root, liveVersion(spark, root)), t,
+            dropDeletedOn = Some("cand_id")))) { b =>
+      val sp = b.spark
+      val v = liveVersion(sp, root)
+      val target = s"${listsDir(root, v)}/${BatchStore.BatchCol}=${b.id}"
+      // monitored encode keeps the assignment similarity so the drift
+      // statistic is a by-product of the batch's own encode (one agg
+      // over the persisted batch-sized frame, never a corpus pass);
+      // the unmonitored path is IndexStream's, byte-identical to
+      // before the policy existed
+      val batchRes: Option[Long] = refreshPolicy match {
+        case None =>
+          IndexStream.encodeAgainst(b.adds, centDir(root, v))
+            .write.mode("overwrite").parquet(target)
+          None
+        case Some(_) =>
+          val centPath = new Path(centDir(root, v))
+          require(centPath
+              .getFileSystem(sp.sparkContext.hadoopConfiguration)
+              .exists(centPath),
+            s"centroid store missing at ${centDir(root, v)} — refusing " +
+              "to encode against an empty quantizer")
+          val assigned = Similarity.ivfAssignSim(
+              BatchStore.spreadBatch(b.adds)
+                .select(col("vec_id").as("cand_id"),
+                  col("embedding").as("cv")),
+              sp.read.parquet(centDir(root, v)))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          assigned
+            .withColumn("scale",
+              graft.functions.VectorFns.quantize_scale(col("cv")))
+            .withColumn("code",
+              graft.functions.VectorFns.quantize_i8(col("cv"), col("scale")))
+            .select("cand_id", "cent_id", "code")
+            .write.mode("overwrite").parquet(target)
+          val r = residualFp(assigned)
+          assigned.unpersist()
+          r
       }
-      .option("checkpointLocation", checkpointDir)
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
-      .start()
+      // deletes land BEFORE a triggered refresh, so the rebuild
+      // excludes them and carries the tombstone set forward
+      if (b.nDels > 0)
+        BatchStore.deleteNonEmpty(sp, listsDir(root, v),
+          b.dels.select("vec_id"))
+      // trigger check at batch END — a between-batches instant: the
+      // next batch resolves the new version, and a crash-replay of
+      // THIS batch is fenced by the rebuild's pinned hwm (its re-write
+      // lands under the pointer filter, dead on arrival); the replayed
+      // batch's recomputed residual compares against the REFRESHED
+      // baseline (trained on the drifted data), so it cannot
+      // double-trigger
+      // the baseline must be STRICTLY positive: a 0 baseline (a corpus
+      // whose vectors sit exactly on its centroids) carries no usable
+      // drift scale — factor × 0 would fire on ANY positive residual,
+      // and the post-refresh baseline could stay 0, so the trigger
+      // would never self-limit; such a degenerate store behaves like
+      // the documented un-stamped case instead (monitor records, never
+      // triggers)
+      for (p <- refreshPolicy; r <- batchRes;
+           base <- versionResidual(sp, root, v)
+           if base > 0L && r > p.residualFactor * base)
+        refresh(sp, root,
+          p.source match {
+            case PinnedCorpus(vecs) => vecs
+            case StoreCorpus(dir) => readStoreCorpus(sp, dir)
+          },
+          p.nlist, p.lloydIters)
+    }
   }
 
   /** Tombstone `ids` (first column = vec_ids) out of the current

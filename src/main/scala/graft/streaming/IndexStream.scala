@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.VectorFns
 import graft.similarity.Similarity
 
@@ -113,42 +113,19 @@ object IndexStream {
                     compactWhenBatchesExceed: Option[Int] = None,
                     kindCol: Option[String] = None)
       : StreamingQuery = {
-    // Store-lifecycle policy, same shape as [[DedupStream]]: at drain
-    // START (between drains by construction), fold old list batch dirs
-    // into a base generation once the live dir count passes the
-    // threshold — a refresh loop that has run thousands of times opens
-    // as cheaply as a fresh build. A CONTINUOUS stream has no "next
-    // drain start", so there the policy re-runs at the top of every
-    // micro-batch, BEFORE the batch writes anything: the previous batch
-    // has committed (or this is a replay, whose first-attempt dir is
-    // the newest and `keepBatches ≥ 1` keeps it out of the fold), so
-    // the between-batches safety argument is the same one the
-    // between-drains placement relies on. Below threshold the re-check
-    // costs one directory listing.
-    def runPolicy(): Unit = compactWhenBatchesExceed.foreach { threshold =>
-      val spark = vecs.sparkSession
-      val p = new Path(listsDir)
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        BatchStore.compactIfOver(spark, listsDir, threshold,
-          dropDeletedOn = Some("cand_id"))
+    // Store-lifecycle policy: once the live dir count passes the
+    // threshold, old list batch dirs fold into a base generation, so a
+    // refresh loop that has run thousands of times opens as cheaply as
+    // a fresh build ([[BatchStore.maintain]] places the check).
+    val spark = vecs.sparkSession
+    BatchStore.maintain(vecs, checkpointDir, continuous, kindCol,
+        policy = () => compactWhenBatchesExceed.foreach(t =>
+          BatchStore.compactIfOver(spark, listsDir, t,
+            dropDeletedOn = Some("cand_id")))) { b =>
+      encodeAgainst(b.adds, centroidDir).write.mode("overwrite")
+        .parquet(s"$listsDir/graft_batch=${b.id}")
+      if (b.nDels > 0)
+        BatchStore.deleteNonEmpty(b.spark, listsDir, b.dels.select("vec_id"))
     }
-    runPolicy()
-    val writer = vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (continuous) runPolicy()
-        val (adds, dels, _, nDels) = kindCol match {
-          case Some(kc) => BatchStore.splitMixed(batch, kc)
-          case None => (batch, batch.limit(0), -1L, 0L)
-        }
-        encodeAgainst(adds, centroidDir).write.mode("overwrite")
-          .parquet(s"$listsDir/graft_batch=$batchId")
-        if (kindCol.nonEmpty && nDels > 0)
-          BatchStore.deleteNonEmpty(batch.sparkSession, listsDir,
-            dels.select("vec_id"))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
-      .start()
   }
 }

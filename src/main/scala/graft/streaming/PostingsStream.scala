@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.TextCorpus
 
 /** Incremental maintenance of a BM25 postings index — the SPARSE
@@ -122,9 +122,8 @@ object PostingsStream {
   /** Start the maintenance stream over a streaming `docs` frame with
     * (doc_id, text) columns. AvailableNow by default (drain-then-stop);
     * `continuous = true` for a long-running micro-batch loop. The
-    * compaction policy placement mirrors [[IndexStream.maintainIndex]]:
-    * at drain start, or (continuous) at the top of each micro-batch,
-    * both between-batches instants by construction.
+    * compaction policy runs where [[BatchStore.maintain]] places it: at
+    * drain start, or (continuous) at the top of each micro-batch.
     *
     * `positions = true` additionally stores per-occurrence token
     * positions (`tp` rows, ~dl-sum extra rows per batch) and marks the
@@ -192,7 +191,7 @@ object PostingsStream {
           "retrofit would silently hide them from phrase matching; " +
           "rebuild the store instead")
       // the marker itself is created lazily inside the first batch write
-      // (see foreachBatch below): a stream that fails before its first
+      // (see the fold below): a stream that fails before its first
       // batch must not leave a marker-only store that fail-closes a
       // positions=false restart
     } else if (hasPositions(spark, storeDir)) {
@@ -224,45 +223,31 @@ object PostingsStream {
         }
       }
     }
-    def runPolicy(): Unit = compactWhenBatchesExceed.foreach { threshold =>
-      val p = new Path(storeDir)
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        BatchStore.compactIfOver(spark, storeDir, threshold,
-          merge = Some(mergeDfPartials), dropDeletedOn = Some("doc_id"))
+    BatchStore.maintain(docs, checkpointDir, continuous, kindCol,
+        policy = () => compactWhenBatchesExceed.foreach(t =>
+          BatchStore.compactIfOver(spark, storeDir, t,
+            merge = Some(mergeDfPartials),
+            dropDeletedOn = Some("doc_id")))) { b =>
+      // marker BEFORE the rows it describes: a crash between the two
+      // leaves a marker-only empty store (healable — see above), never
+      // positional data the marker check would refuse to resume
+      ensureMarker()
+      // NOT spread ([[BatchStore.spreadBatch]]): measured round 18 —
+      // tokenize is regex-split cheap, and the positional `tp` rows
+      // reach this write without any intervening exchange, so a
+      // spread batch writes one file per core and every downstream
+      // serve pays the file-count + lost per-file (kind, word)
+      // clustering (t15/t17/t20/t22 regressed 10-40% under spread)
+      batchPartial(b.adds.select("doc_id", "text"), positions, analyzer)
+        .sortWithinPartitions("kind", "word")
+        .write.mode("overwrite")
+        .parquet(s"$storeDir/${BatchStore.BatchCol}=${b.id}")
+      // the batch's tombstones publish AFTER its adds: a same-batch
+      // add+del leaves the doc deleted, and a replayed batch re-lands
+      // its delete as one more duplicate-tolerant dir (set semantics)
+      if (b.nDels > 0)
+        BatchStore.deleteNonEmpty(b.spark, storeDir, b.dels.select("doc_id"))
     }
-    runPolicy()
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (continuous) runPolicy()
-        // marker BEFORE the rows it describes: a crash between the two
-        // leaves a marker-only empty store (healable — see above), never
-        // positional data the marker check would refuse to resume
-        ensureMarker()
-        val (adds, dels, _, nDels) = kindCol match {
-          case Some(kc) => BatchStore.splitMixed(batch, kc)
-          case None => (batch, batch.limit(0), -1L, 0L)
-        }
-        // NOT spread ([[BatchStore.spreadBatch]]): measured round 18 —
-        // tokenize is regex-split cheap, and the positional `tp` rows
-        // reach this write without any intervening exchange, so a
-        // spread batch writes one file per core and every downstream
-        // serve pays the file-count + lost per-file (kind, word)
-        // clustering (t15/t17/t20/t22 regressed 10-40% under spread)
-        batchPartial(adds.select("doc_id", "text"), positions, analyzer)
-          .sortWithinPartitions("kind", "word")
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/${BatchStore.BatchCol}=$batchId")
-        // the batch's tombstones publish AFTER its adds: a same-batch
-        // add+del leaves the doc deleted, and a replayed batch re-lands
-        // its delete as one more duplicate-tolerant dir (set semantics)
-        if (kindCol.nonEmpty && nDels > 0)
-          BatchStore.deleteNonEmpty(batch.sparkSession, storeDir,
-            dels.select("doc_id"))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
-      .start()
   }
 
   /** Tombstone `docIds` (first column) out of the index — the takedown

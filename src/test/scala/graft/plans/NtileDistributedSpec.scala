@@ -9,12 +9,25 @@ import org.apache.spark.sql.functions._
   * single-partition WindowExecs in `agg_rfm_segments` (round-19), so
   * the oracle hash rides on this identity. Covers: n divisible and not
   * divisible by t, n < t, duplicate sort keys broken by a unique
-  * tie-break, descending orders, and skewed value distributions. */
+  * tie-break, descending orders, skewed value distributions, and a
+  * session with exchange reuse and AQE both off. */
 class NtileDistributedSpec extends SparkSpec {
   import spark.implicits._
 
   private def check(n: Int, tiles: Int, keyOf: Int => Long,
-                    desc: Boolean): Unit = {
+                    desc: Boolean,
+                    confs: Map[String, String] = Map.empty): Unit = {
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try checkUnderConfs(n, tiles, keyOf, desc)
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def checkUnderConfs(n: Int, tiles: Int, keyOf: Int => Long,
+                              desc: Boolean): Unit = {
     val df = (0 until n).map(i => (i.toLong, keyOf(i))).toDF("id", "k")
     val order =
       if (desc) Seq(col("k").desc, col("id")) else Seq(col("k").asc, col("id"))
@@ -39,6 +52,13 @@ class NtileDistributedSpec extends SparkSpec {
     check(n = 2, tiles = 4, keyOf = _ => 5L, desc = false) // n < tiles
     check(n = 64, tiles = 3, keyOf = i => if (i < 60) 1L else i.toLong,
       desc = false) // heavy duplicate-key skew
+    // with exchange reuse AND AQE off, each consumer of the
+    // range-partitioned frame would plan (and sample) its own range
+    // exchange unless the partition id is stamped once
+    check(n = 20000, tiles = 4, keyOf = i => (i * 7919L) % 1000, desc = false,
+      confs = Map("spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.exchange.reuse" -> "false",
+        "spark.sql.adaptive.enabled" -> "false"))
   }
 
   test("plans no single-partition window over the data") {

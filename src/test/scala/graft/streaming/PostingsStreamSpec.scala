@@ -14,21 +14,29 @@ class PostingsStreamSpec extends SparkSpec {
   private def tmp(p: String) =
     java.nio.file.Files.createTempDirectory(p).toString
 
+  /** Place wave `i` of `df` (doc_id mod k) as one ordered file. */
+  private def placeWave(watch: String, df: DataFrame, k: Int, i: Int): Unit = {
+    val stage = tmp("psstage")
+    df.filter(col("doc_id") % k === i)
+      .coalesce(1).write.mode("overwrite").parquet(stage)
+    val part = new java.io.File(stage).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val dest = new java.io.File(watch, s"b$i.parquet")
+    java.nio.file.Files.move(part.toPath, dest.toPath)
+    dest.setLastModified(System.currentTimeMillis() - 3600L * 1000 + i * 2000L)
+  }
+
   private def orderedBatches(df: DataFrame, k: Int): String = {
     val watch = tmp("pswatch")
-    val base = System.currentTimeMillis() - 3600L * 1000
-    (0 until k).foreach { i =>
-      val stage = tmp("psstage")
-      df.filter(col("doc_id") % k === i)
-        .coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dest = new java.io.File(watch, s"b$i.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(base + i * 2000L)
-    }
+    (0 until k).foreach(placeWave(watch, df, k, _))
     watch
   }
+
+  private def docStream(watch: String): DataFrame =
+    spark.readStream
+      .schema("doc_id BIGINT, text STRING")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(watch)
 
   private def docs: DataFrame =
     Tables.documents(spark, sf).select("doc_id", "text")
@@ -46,15 +54,19 @@ class PostingsStreamSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getLong(3))).toSet
 
+  /** The from-scratch batch build's top-5 over `d`, scores fixed-point. */
+  private def batchSet(d: DataFrame, q: DataFrame): Set[(Long, Int, Long, Long)] =
+    TextCorpus.bm25TopK(d, col("doc_id"), col("text"), q, k = 5)
+      .withColumn("sfp", round(col("score") * 1e6).cast("long"))
+      .select("query_id", "rank", "doc_id", "sfp")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        r.getLong(3))).toSet
+
   private def drained(d: DataFrame, waves: Int,
                       positions: Boolean = false): String = {
     val root = tmp("psroot")
-    val stream = spark.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(orderedBatches(d, waves))
-    PostingsStream.maintainPostings(stream, root + "/index", tmp("psckpt"),
-        positions = positions)
+    PostingsStream.maintainPostings(docStream(orderedBatches(d, waves)),
+        root + "/index", tmp("psckpt"), positions = positions)
       .awaitTermination()
     root + "/index"
   }
@@ -63,13 +75,32 @@ class PostingsStreamSpec extends SparkSpec {
     val d = docs
     val store = drained(d, 3)
     val q = queriesOf(d)
-    val batch = TextCorpus.bm25TopK(d, col("doc_id"), col("text"), q, k = 5)
-      .withColumn("sfp", round(col("score") * 1e6).cast("long"))
-      .select("query_id", "rank", "doc_id", "sfp")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getLong(3))).toSet
+    val batch = batchSet(d, q)
     assert(batch.nonEmpty)
     assert(servedSet(store, q) === batch)
+  }
+
+  test("continuous: the per-batch policy bounds the live dirs and its " +
+       "df-partial merge keeps the served ranking exact") {
+    val d = docs
+    val waves = 5
+    val store = tmp("pscont") + "/index"
+    val watch = tmp("pscontwatch")
+    val q = PostingsStream.maintainPostings(docStream(watch), store,
+      tmp("pscontckpt"), continuous = true,
+      compactWhenBatchesExceed = Some(2))
+    try (0 until waves).foreach { i =>
+      placeWave(watch, d, waves, i)
+      q.processAllAvailable()
+      // the policy runs at the top of each batch and leaves at most the
+      // bound live; the batch then writes one more dir
+      val live = BatchStore.liveBatchCount(spark, store)
+      assert(live <= 2 + 1, s"wave $i: $live live dirs under bound 2")
+    } finally q.stop()
+    assert(BatchStore.readPointer(spark, store).isDefined,
+      "no compaction published mid-stream")
+    val qs = queriesOf(d)
+    assert(servedSet(store, qs) === batchSet(d, qs))
   }
 
   test("compact: serve parity, and the base folds df to one row per word") {
@@ -122,11 +153,7 @@ class PostingsStreamSpec extends SparkSpec {
     assert(setOf(PostingsStream.phraseServe(spark, store, phrases, 5)) === batch)
     // bm25 over the positional store still matches the batch build
     val q = queriesOf(d)
-    val bm25Batch = graft.ops.TextCorpus
-      .bm25TopK(d, col("doc_id"), col("text"), q, k = 5)
-      .withColumn("sfp", round(col("score") * 1e6).cast("long"))
-      .select("query_id", "rank", "doc_id", "sfp").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
+    val bm25Batch = batchSet(d, q)
     assert(servedSet(store, q) === bm25Batch)
     // fold preserves both serves
     PostingsStream.compactIndex(spark, store, keepBatches = 1)
@@ -144,20 +171,14 @@ class PostingsStreamSpec extends SparkSpec {
           col("text").as("query_text")), 5)
     }
     // positional retrofit of a position-less store: refuse
-    val stream1 = spark.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(orderedBatches(d, 2))
+    val stream1 = docStream(orderedBatches(d, 2))
     assertThrows[IllegalArgumentException] {
       PostingsStream.maintainPostings(stream1, plain, tmp("psckpt"),
         positions = true)
     }
     // position-less append to a positional store: refuse
     val positional = drained(d, 2, positions = true)
-    val stream2 = spark.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(orderedBatches(d, 2))
+    val stream2 = docStream(orderedBatches(d, 2))
     assertThrows[IllegalArgumentException] {
       PostingsStream.maintainPostings(stream2, positional, tmp("psckpt"))
     }
